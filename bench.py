@@ -1,60 +1,47 @@
-"""Benchmark harness (driver contract).
+"""Benchmark harness and per-query profiler.
 
-Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
+Usage::
+
+    python bench.py              # the 40 headline queries
+    python bench.py --all        # every registry query
+    python bench.py NAME [NAME...]
+
+Runs the named queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints TWO
-JSON lines: a full detail record (per-query execution AND construction
-series), then a FINAL compact line sized to fit entirely inside the
-driver's 2,000-char stdout tail window::
+JSON lines: a full detail record, then a FINAL compact line sized to fit
+entirely inside a 2,000-char stdout tail window::
 
     {"metric": "headline_wall_sec", "value": N, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": 0.1, ...}
+     "queries": {"q": sec, ...}, "failed": [...], "sf": 0.1, ...}
 
-Round-6 protocol fix: round 5's single line doubled past the tail
-window when the construction dict was added and the driver recorded
-``parsed: null``. The compact line carries the headline value plus the
-per-query TOTALS only (no split dicts), so the tail always ends with
-one parseable record.
+Protocol:
 
-Execution is forced with the ``noop`` sink (full plan runs distributed,
-nothing is collected to the driver) so timings measure the engine, not
-driver materialization. Each query gets one un-timed warm-up at sf0.001
-to exclude JVM/codegen warm-up from the numbers.
+- Execution is forced with the ``noop`` sink (the full plan runs
+  distributed, nothing is collected to the driver), so timings measure
+  the engine, not driver materialization.
+- One un-timed warm-up pass over every query at sf0.01 (JVM, codegen,
+  Arrow), then per query one un-timed rep at the measured SF followed by
+  ``REPS`` timed reps.
+- Each query's value is construction + execution, the median of the
+  per-rep totals: queries with driver-coordinated build work (BPE
+  training rounds, the ANN recall gate's eager searches, eager
+  statistic checkpoints) do real cluster work before their terminal
+  action, and a plan rewrite must not be able to move that work out of
+  the headline. The split series stay in the detail record.
+- The last timed rep runs construction and execution under their own
+  job groups (``bench-<name>-build`` / ``bench-<name>-exec``) and reads
+  each phase's counters from Spark's status store right after the op
+  (``perfbench.trace.COUNTERS``: jobs, stages, tasks, executor CPU ms,
+  input/shuffle/spill bytes, GC ms). Wall time on a shared host swings
+  with its neighbours; these counters do not, so they are the evidence
+  for a plan change. A reused exchange runs as a SKIPPED stage, which
+  the counters leave out, so ``stages`` and ``shuffle_write_bytes``
+  also show runtime exchange reuse.
+- A query that raises is listed under ``failed`` in both lines; the
+  headline ``value`` sums the queries that ran.
 
-Measurement protocol (round-4 hardening — the r03 ledger showed a ~1.2×
-uniform phantom drift on unchanged plans caused by background load):
-
-- IDLE GATE: before the timed sweep, if the 1-minute load average
-  exceeds ``$SPARK_GRAFT_BENCH_MAX_LOAD`` (default 4.0), wait up to
-  ``$SPARK_GRAFT_BENCH_IDLE_WAIT`` seconds (default 120) for it to
-  drop. The run proceeds either way, but the emitted JSON carries
-  ``load_1m_start`` / ``load_1m_end`` and ``idle_gate_ok`` so a
-  contaminated recording is self-identifying instead of silently noisy.
-- MEDIAN OF N: each query is timed ``$SPARK_GRAFT_BENCH_REPS`` times
-  (default 3) back-to-back and the MEDIAN is reported — a one-off
-  scheduler stall or page-cache miss no longer moves the ledger.
-- PER-QUERY WARM REP (round-5 hardening — the r04 ledger still showed
-  up to 14× in-sweep vs isolated spread on full --all sweeps): before
-  a query's timed reps, one UN-TIMED rep runs at the measured SF and
-  the JVM is asked to GC. The sf0.1 inputs total ~17 MB, so the spread
-  was never input page cache — it is same-JVM sweep-position state
-  (accumulated heap garbage, codegen/broadcast/shuffle residue from
-  predecessors). The warm rep re-establishes the hot path the isolated
-  measurement sees; the GC levels heap state across sweep positions.
-  Timings therefore measure the steady-state engine, matching how a
-  long-lived 100 TB cluster session actually runs.
-- CONSTRUCTION COUNTED IN THE HEADLINE (round-6, per driver advice):
-  queries with driver-coordinated build-time work (BPE training
-  rounds, the recall gate's eager searches, eager statistic
-  checkpoints) do real cluster work before their terminal action.
-  Round 5 measured that cost but kept it OUT of the headline, which
-  let a plan rewrite shift work from the gated execution series into
-  the ungated construction series. From round 6 each ``queries`` value
-  is construction+execution (median of per-rep totals) and the
-  headline sums those totals; ``execution`` / ``construction`` remain
-  as split secondary series in the detail record. NOTE on
-  comparability: r1–r4 values timed everything but never isolated or
-  split construction; r5 values are execution-only. Cross-round
-  comparisons must respect the protocol epochs tagged in BENCHLOG.md.
+BENCHLOG.md tags each recorded table with its protocol epoch; compare
+rounds with ``tools/bench_compare.py``.
 """
 
 from __future__ import annotations
@@ -64,6 +51,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
@@ -74,10 +62,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # reach JIT-compiled tiers after a few thousand rows, and a ~50-row
 # warm-up leaves the first timed run paying the interpreter tax.
 WARMUP_SF_DIR = "/root/testdata/sf0.01"
+REPS = 3
+# Local properties ``SparkContext.setJobGroup`` sets on the calling thread.
+JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 
 # Headline set: the most expensive / representative query per capability
-# area. Names must exist in the plans registry; missing ones are skipped
-# (so bench keeps emitting numbers while capabilities are being built).
+# area. Every name must exist in the plans registry.
 HEADLINE = [
     "flagship_top_customer_per_nation",  # join-heavy + window
     "pricing_summary",                   # wide scan + 8-agg groupBy
@@ -129,261 +123,137 @@ def _sf_from_dir(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def _load_1m() -> float:
+def select(args: list[str]) -> list[str]:
+    """Query names for a command line: ``--all`` is the whole registry,
+    positional names are taken as given, no names is the headline set.
+    Unknown names exit at once instead of shrinking the run.
+    ``plans.load_all()`` must have run."""
+    from big_data_imdb_classifier_spark import plans
+
+    if "--all" in args:
+        return sorted(plans.QUERIES)
+    names = list(dict.fromkeys(args)) or HEADLINE
+    unknown = [n for n in names if n not in plans.QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    return names
+
+
+def run(spark, name: str, sf_dir: str, group: str | None = None) -> tuple[float, float]:
+    """Build ``name`` and run it into the noop sink; returns the
+    construction and execution seconds. With ``group``, the phases run
+    under the job groups ``<group>-build`` and ``<group>-exec``."""
+    from big_data_imdb_classifier_spark import plans
+
+    sc = spark.sparkContext
+    if group:
+        sc.setJobGroup(f"{group}-build", name)
+    t0 = time.perf_counter()
+    df = plans.QUERIES[name](spark, sf_dir)
+    t1 = time.perf_counter()
+    if group:
+        sc.setJobGroup(f"{group}-exec", name)
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    # Queries that persist intermediates (pagerank edges, triangle edge
+    # list, per-doc LM scores) would otherwise leave their caches
+    # resident for every later query's run.
+    spark.catalog.clearCache()
+    return t1 - t0, t2 - t1
+
+
+def profile(spark, store, name: str, sf_dir: str) -> dict:
+    """One ``run`` of ``name`` under the job groups ``bench-<name>-*``;
+    returns both phases' seconds and their ``store.group`` counters.
+    The calling thread's previous job group is restored."""
+    sc = spark.sparkContext
+    prev = [sc.getLocalProperty(k) for k in JOB_GROUP_PROPS]
+    group = f"bench-{name}"
     try:
-        return round(os.getloadavg()[0], 2)
-    except OSError:  # platforms without getloadavg
-        return -1.0
+        build_s, exec_s = run(spark, name, sf_dir, group)
+    finally:
+        for k, v in zip(JOB_GROUP_PROPS, prev):
+            sc.setLocalProperty(k, v)
+    return {
+        "build_s": build_s,
+        "exec_s": exec_s,
+        "build": store.group(f"{group}-build"),
+        "exec": store.group(f"{group}-exec"),
+    }
 
 
-def _idle_gate(max_load: float, max_wait_sec: float) -> bool:
-    """Wait (bounded) for the machine to go idle; True iff the gate was
-    satisfied when the timed sweep started."""
-    deadline = time.monotonic() + max_wait_sec
-    while True:
-        load = _load_1m()
-        if load < 0 or load <= max_load:
-            return True
-        if time.monotonic() >= deadline:
-            print(
-                f"bench: idle gate NOT met (load {load} > {max_load} after "
-                f"{max_wait_sec}s) — recording anyway, annotated",
-                file=sys.stderr,
-            )
-            return False
-        time.sleep(5)
-
-
-def _calibrate(spark, reps: int = 3, agg: str = "median") -> float:
-    """Fixed-work calibration probe (round 7, VERDICT r6 task 5): a
-    constant CPU-bound JVM job — hash + reduce over a fixed 64M-row
-    range, no IO, no Python — whose wall time depends only on host
-    conditions. Recorded at sweep start AND end, it turns the ±10%
-    round-to-round ledger drift from an unexplainable mystery into an
-    auditable quotient: two sweeps' per-query numbers are comparable
-    after dividing by their calibration ratio, and a sweep whose start
-    and end calibrations disagree is self-flagged as contaminated.
-
-    ``agg='min'`` is for the MID-SWEEP series readings (round 9): the
-    probe's job is to read the host's available speed, and the min of
-    its samples is the least contaminated by one-off residue from the
-    query that just finished; the boundary probes keep the median-of-3
-    convention every prior round's anchors were recorded under."""
-    from pyspark.sql import functions as F
-
-    samples = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 64_000_000, 1, 32)
-            .select(F.xxhash64("id").alias("h"))
-            .agg(F.sum("h"))
-            .collect()
-        )
-        samples.append(time.perf_counter() - t0)
-    val = min(samples) if agg == "min" else sorted(samples)[len(samples) // 2]
-    return round(val, 3)
-
-
-# How many of the sweep's slowest queries get an isolated re-timing in
-# --all mode (the canonical per-query series for BENCHLOG regression
-# calls — in-sweep numbers keep sweep-position noise even with the warm
-# rep + GC protocol).
-ISOLATE_SLOWEST = 20
+def _median(xs: list[float]) -> float:
+    return round(sorted(xs)[len(xs) // 2], 3)
 
 
 def main() -> None:
     from big_data_imdb_classifier_spark import plans
     from big_data_imdb_classifier_spark.session import get_spark
+    from perfbench.trace import StatusStore
 
     plans.load_all()
+    names = select(sys.argv[1:])
     spark = get_spark(app_name="bench")
+    store = StatusStore(spark)
 
-    def run(name: str, sf_dir: str) -> tuple[float, float]:
-        # Time CONSTRUCTION and execution SEPARATELY: queries with
-        # driver-coordinated build-time work (BPE training's per-round
-        # argmax, the ANN recall gate's eager searches, eagerly
-        # checkpointed statistic frames) do real cluster work before the
-        # final action. Both series are recorded, and the gated
-        # per-query value is their SUM — an execution-only gate would
-        # let a plan rewrite hide work by eager-checkpointing heavy
-        # stages into the ungated series (round-6 fix, driver advice).
-        t0 = time.perf_counter()
-        df = plans.QUERIES[name](spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        # Queries that persist intermediates (pagerank edges, triangle
-        # edge list, per-doc LM scores) would otherwise leave their
-        # caches resident for every LATER query's run — measured as a
-        # 15x slowdown on late-alphabet TPC-H queries in a full --all
-        # sweep. Isolate each timing.
-        spark.catalog.clearCache()
-        return t1 - t0, t2 - t1
-
-    # `python bench.py --all` times EVERY registry query (the secondary
-    # regression ledger, BENCHLOG.md); the driver's default run stays the
-    # headline set.
-    if "--all" in sys.argv:
-        names = sorted(plans.QUERIES)
-    else:
-        names = [n for n in HEADLINE if n in plans.QUERIES]
-
-    # Warm-up pass (tiny SF): JIT, codegen, Arrow init.
-    for n in names:
+    for n in names:  # warm-up pass (tiny SF): JIT, codegen, Arrow init
         try:
-            run(n, WARMUP_SF_DIR)
+            run(spark, n, WARMUP_SF_DIR)
         except Exception:
             pass
-
-    reps = max(int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")), 1)
-    max_load = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "4.0"))
-    idle_wait = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT", "120"))
-    load_start = _load_1m()
-    idle_ok = _idle_gate(max_load, idle_wait)
-
-    def jvm_gc() -> None:
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
-    calibration_start = _calibrate(spark)
 
     timings: dict[str, float] = {}
     execution: dict[str, float] = {}
     construction: dict[str, float] = {}
-    # Probe SERIES through the sweep (round 8): a single start/end probe
-    # pair cannot normalize a sweep whose host speed DRIFTS mid-run (the
-    # r8 degraded-host epoch made every early-window query a spurious
-    # "mover"). A probe every PROBE_EVERY queries gives each query a
-    # nearest-in-time host-speed reading; bench_compare uses the series
-    # when both sides carry one. Round-9 hardening (the r8 series was
-    # 1-rep, un-GC'd, and over-read sweep-internal residue by ~3× —
-    # 203/221 spurious "movers" when used as a divisor): GC first, then
-    # min-of-2 samples, so the reading tracks HOST speed, not the heap
-    # state the previous query left behind. ~25 s overhead on a 220 s
-    # sweep. `after_n` indexes the FULL sweep order — emitted below as
-    # `sweep_order`, failures included — NOT the surviving timings keys
-    # (round-8 ADVICE: reconstructing positions from the timings dict
-    # compresses indices after any mid-sweep failure and normalizes
-    # every later query against the wrong probe reading).
-    PROBE_EVERY = 25
-    calibration_series: list[dict] = []
-    # PER-QUERY probe stamp (round 10, r9 VERDICT task 3): one GC'd
-    # min-of-2 probe reading taken immediately before each query's warm
-    # rep, keyed by query name in the detail record (`probe_at`). The
-    # boundary pair and the --all series can only normalize per
-    # boundary/window; on a host whose speed bounces at minute
-    # granularity (BENCHLOG r8/r9 epochs) a per-query stamp lets the
-    # A/B comparison self-normalize each query against the host speed
-    # it actually ran under. Additive field only — the probe runs
-    # OUTSIDE the timed region, the compact line is unchanged, and the
-    # gated per-query values keep the r7 protocol.
-    probe_at: dict[str, float] = {}
-    for qi, n in enumerate(names):
-        if "--all" in sys.argv and qi and qi % PROBE_EVERY == 0:
-            jvm_gc()
-            calibration_series.append(
-                {"after_n": qi, "sec": _calibrate(spark, reps=2, agg="min")}
-            )
+    counters: dict[str, dict] = {}
+    failed: list[str] = []
+    for n in names:
         try:
-            # Level sweep-position state: collect predecessors' garbage,
-            # then one un-timed rep at the measured SF so the timed reps
-            # see the same hot JIT/codegen/broadcast paths an isolated
-            # median-of-3 sees (see module docstring).
-            jvm_gc()
-            probe_at[n] = _calibrate(spark, reps=2, agg="min")
-            run(n, SF_DIR)
-            samples = [run(n, SF_DIR) for _ in range(reps)]
-            execs = sorted(s[1] for s in samples)
-            builds = sorted(s[0] for s in samples)
-            totals = sorted(s[0] + s[1] for s in samples)
-            # Gated value = construction + execution (median of per-rep
-            # totals): work cannot migrate out of the gate by moving
-            # between the two phases (round-6, driver advice).
-            timings[n] = round(totals[len(totals) // 2], 3)
-            execution[n] = round(execs[len(execs) // 2], 3)
-            construction[n] = round(builds[len(builds) // 2], 3)
+            run(spark, n, SF_DIR)  # un-timed rep at the measured SF
+            samples = [run(spark, n, SF_DIR) for _ in range(REPS - 1)]
+            prof = profile(spark, store, n, SF_DIR)
+            samples.append((prof["build_s"], prof["exec_s"]))
         except Exception as e:  # keep emitting numbers even if one breaks
             print(f"bench: {n} failed: {e}", file=sys.stderr)
-
-    calibration_end = _calibrate(spark)
-
-    # --all mode: isolated re-timing of the sweep's slowest tail — the
-    # CANONICAL per-query series for regression calls (BENCHLOG r7
-    # protocol). Each gets its own GC + warm rep + median-of-3, in
-    # ascending-cost order, long after whatever sweep position it
-    # originally ran in.
-    isolated: dict[str, float] = {}
-    isolated_probe_at: dict[str, float] = {}
-    if "--all" in sys.argv and timings:
-        tail = sorted(timings, key=lambda n: -timings[n])[:ISOLATE_SLOWEST]
-        for n in sorted(tail, key=lambda n: timings[n]):
-            try:
-                jvm_gc()
-                isolated_probe_at[n] = _calibrate(spark, reps=2, agg="min")
-                run(n, SF_DIR)
-                totals = sorted(
-                    sum(run(n, SF_DIR)) for _ in range(reps)
-                )
-                isolated[n] = round(totals[len(totals) // 2], 3)
-            except Exception as e:  # noqa: BLE001
-                print(f"bench: isolated {n} failed: {e}", file=sys.stderr)
+            traceback.print_exc()
+            failed.append(n)
+            continue
+        timings[n] = _median([b + x for b, x in samples])
+        construction[n] = _median([b for b, _ in samples])
+        execution[n] = _median([x for _, x in samples])
+        counters[n] = {"build": prof["build"], "exec": prof["exec"]}
 
     meta = {
         "sf": _sf_from_dir(SF_DIR),
-        "reps": reps,
+        "reps": REPS,
         "stat": "median",
-        "protocol": "r7-total-calibrated",  # construction+execution per
-        # query + fixed-work calibration probe + isolated slow tail
-        "idle_gate_ok": idle_ok,
-        "load_1m_start": load_start,
-        "load_1m_end": _load_1m(),
-        "calibration_start_sec": calibration_start,
-        "calibration_end_sec": calibration_end,
-        **(
-            {"calibration_series": calibration_series}
-            if calibration_series
-            else {}
-        ),
+        "protocol": "P5-total-counted",  # BENCHLOG.md protocol epochs
     }
     detail = {
         "metric": "headline_wall_sec_detail",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        # Full sweep order, FAILURES INCLUDED — the calibration series'
-        # after_n values index this list. Detail record only (221 names
-        # would overflow the compact line's tail-window budget).
-        "sweep_order": names,
         "queries": timings,
+        "failed": failed,
         # Split secondary series: where each query's total comes from.
         "execution": execution,
         "execution_total": round(sum(execution.values()), 3),
         "construction": construction,
         "construction_total": round(sum(construction.values()), 3),
-        # Host-speed stamp adjacent to each query's timed reps (GC'd
-        # min-of-2 fixed-work probe; see sweep loop). Detail record
-        # only — the compact line's tail-window budget is unchanged.
-        "probe_at": {k: v for k, v in probe_at.items() if k in timings},
-        **({"isolated": isolated,
-            "isolated_total": round(sum(isolated.values()), 3),
-            "isolated_probe_at": {
-                k: v for k, v in isolated_probe_at.items() if k in isolated
-            }}
-           if isolated else {}),
+        # Status-store counters of each query's last timed rep, per phase.
+        "counters": counters,
         **meta,
     }
     print(json.dumps(detail))
-    # FINAL compact line — the driver captures a bounded stdout tail, so
-    # the LAST line must be a complete parseable record on its own (r5's
-    # single fat line overflowed the window and parsed as null). Totals
-    # only, no split dicts: ~1.3 kB at 35 headline queries.
+    # FINAL compact line: a caller that keeps a bounded stdout tail needs
+    # the LAST line to be a complete parseable record on its own.
+    # Totals only, no split dicts or counters.
     compact = {
         "metric": "headline_wall_sec",
         "value": detail["value"],
         "unit": "sec",
         "queries": timings,
+        "failed": failed,
         "execution_total": detail["execution_total"],
         "construction_total": detail["construction_total"],
         **meta,
@@ -391,6 +261,9 @@ def main() -> None:
     line = json.dumps(compact)
     if len(line) > 1900:  # never let the tail window truncate the record
         compact.pop("queries")
+        line = json.dumps(compact)
+    while len(line) > 1900:  # many failures: the detail line lists them all
+        compact["failed"] = compact["failed"][:-1]
         line = json.dumps(compact)
     print(line)
     spark.stop()

@@ -1,18 +1,20 @@
-"""Calibrated round-over-round bench comparison (round 8, VERDICT r7
-task 4): both BENCH_ALL files carry the fixed-work calibration probe
-since r7, so per-query movement is judged AFTER normalizing each side
-by its own probe — host drift divides out, and what remains is plan or
-code movement that needs an attribution.
+"""Round-over-round comparison of two ``bench.py`` detail records.
 
-For each common query the compared value is the ISOLATED re-timing when
-both sides have one (the canonical per-query series, BENCHLOG r7
-protocol — in-sweep numbers keep sweep-position noise), else the sweep
-value on both sides (never mixed: an isolated-vs-sweep ratio would
-manufacture movers out of protocol differences).
+Wall movers: queries whose construction+execution total (``queries``)
+moved by more than ``--flag`` (default 1.3x) either way. Wall time on a
+shared host swings with its neighbours' load, so these are leads, not
+verdicts.
+
+Counter movers: per query and phase (``build``/``exec``), the
+status-store counters of the last timed rep (``counters``, written since
+the P5 protocol epoch). ``jobs`` and ``stages`` move on any change; the
+amounts (shuffle bytes, executor CPU ms, spill bytes) move by more than
+the flag. Records without counters (r10 and older) compare on wall time
+only.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [--flag 1.3]
-Prints a JSON summary and the mover table; exit code stays 0 (the
-attribution requirement is editorial — BENCHLOG — not a gate).
+Prints a JSON summary and both mover tables; the exit code stays 0 (the
+attribution requirement is editorial, in BENCHLOG.md, not a gate).
 """
 
 from __future__ import annotations
@@ -20,47 +22,69 @@ from __future__ import annotations
 import json
 import sys
 
+EXACT = ("jobs", "stages")
+AMOUNTS = (
+    "shuffle_read_bytes",
+    "shuffle_write_bytes",
+    "executor_cpu_ms",
+    "spill_bytes",
+)
 
-def probe(d: dict) -> float | None:
-    s = d.get("calibration_start_sec")
-    e = d.get("calibration_end_sec")
-    if s is None or e is None:
-        return None
-    return (float(s) + float(e)) / 2.0
+
+def _moved(old: float, new: float, flag: float, floor: float = 1) -> bool:
+    """True when ``new/old`` is beyond ``flag`` either way; values under
+    ``floor`` count as ``floor``, so 0 -> 0 and tiny amounts stay put."""
+    ratio = max(new, floor) / max(old, floor)
+    return ratio > flag or ratio < 1 / flag
 
 
-def probe_at_factory(d: dict):
-    """Per-query host-speed reading: with a calibration SERIES (r8+),
-    each query gets the probe nearest its sweep position (linear
-    interpolation between readings), so a drifting host normalizes
-    per-window instead of by one sweep-wide constant. Isolated
-    re-timings always use the END probe (they run after the sweep).
+def compare(old: dict, new: dict, flag: float = 1.3) -> dict:
+    qo, qn = old["queries"], new["queries"]
+    common = sorted(set(qo) & set(qn))
+    co, cn = old.get("counters", {}), new.get("counters", {})
 
-    Positions come from the artifact's ``sweep_order`` (r9+): the
-    series' after_n values index the FULL sweep order, failures
-    included. Reconstructing positions from the surviving timings keys
-    (the r8 fallback, kept only for r8-era artifacts) compresses
-    indices after any mid-sweep failure and normalizes every later
-    query against the wrong probe reading (round-8 ADVICE) — r8
-    artifacts this tool compares had zero failed queries, so the
-    fallback is exact for them."""
-    names = d.get("sweep_order") or sorted(d["queries"])
-    pts = [(0.0, d.get("calibration_start_sec"))]
-    for row in d.get("calibration_series", []):
-        pts.append((float(row["after_n"]), row["sec"]))
-    pts.append((float(len(names)), d.get("calibration_end_sec")))
-    pos = {n: i for i, n in enumerate(names)}
+    wall_movers = [
+        {
+            "query": name,
+            "old_sec": qo[name],
+            "new_sec": qn[name],
+            "ratio": round(qn[name] / max(qo[name], 1e-9), 2),
+        }
+        for name in common
+        if _moved(qo[name], qn[name], flag, floor=0.001)
+    ]
+    wall_movers.sort(key=lambda m: -m["ratio"])
 
-    def probe_at(name: str) -> float:
-        x = pos.get(name, 0)
-        for (x0, y0), (x1, y1) in zip(pts, pts[1:]):
-            if x0 <= x <= x1:
-                if x1 == x0:
-                    return y1
-                return y0 + (y1 - y0) * (x - x0) / (x1 - x0)
-        return pts[-1][1]
+    counter_movers = []
+    for name in common:
+        if name not in co or name not in cn:
+            continue
+        for phase in ("build", "exec"):
+            for key in EXACT + AMOUNTS:
+                a, b = co[name][phase][key], cn[name][phase][key]
+                if (a != b) if key in EXACT else _moved(a, b, flag):
+                    counter_movers.append(
+                        {"query": name, "phase": phase, "counter": key,
+                         "old": a, "new": b}
+                    )
 
-    return probe_at, len(d.get("calibration_series", [])) > 0
+    total_o = sum(qo[n] for n in common)
+    total_n = sum(qn[n] for n in common)
+    summary = {
+        "common_queries": len(common),
+        "counters": bool(co and cn),
+        "total_old": round(total_o, 1),
+        "total_new": round(total_n, 1),
+        "total_ratio": round(total_n / max(total_o, 1e-9), 3),
+        "flag": flag,
+        "n_wall_movers": len(wall_movers),
+        "n_counter_movers": len(counter_movers),
+    }
+    return {
+        "summary": summary,
+        "wall_movers": wall_movers,
+        "counter_movers": counter_movers,
+    }
 
 
 def main() -> None:
@@ -77,105 +101,7 @@ def main() -> None:
         old = json.load(fh)
     with open(args[1]) as fh:
         new = json.load(fh)
-
-    p_old, p_new = probe(old), probe(new)
-    calibrated = p_old is not None and p_new is not None
-    if not calibrated:
-        # A side without a probe (pre-r7 artifact) gets a RAW
-        # comparison — dividing by a fake probe would manufacture or
-        # mask movers; the summary says which comparison ran.
-        p_old = p_new = 1.0
-    qo, qn = old["queries"], new["queries"]
-    iso_o, iso_n = old.get("isolated", {}), new.get("isolated", {})
-    common = sorted(set(qo) & set(qn))
-
-    pa_old, series_old = probe_at_factory(old) if calibrated else (None, False)
-    pa_new, series_new = probe_at_factory(new) if calibrated else (None, False)
-    use_series = calibrated and (series_old or series_new)
-    # Exact per-query stamps (r10+, VERDICT r9 task 3): a GC'd min-of-2
-    # probe taken immediately before each query's warm rep, and one per
-    # isolated re-timing. When a side carries the stamp for a query it
-    # beats any interpolation — it is the host speed that query actually
-    # ran under. Sides without stamps keep the series/boundary path.
-    stamp_old = old.get("probe_at", {})
-    stamp_new = new.get("probe_at", {})
-    iso_stamp_old = old.get("isolated_probe_at", {})
-    iso_stamp_new = new.get("isolated_probe_at", {})
-    use_stamps = calibrated and bool(stamp_old or stamp_new)
-
-    movers = []
-    total_o = total_n = 0.0
-    for name in common:
-        both_iso = name in iso_o and name in iso_n
-        t_o = iso_o[name] if both_iso else qo[name]
-        t_n = iso_n[name] if both_iso else qn[name]
-        total_o += qo[name]
-        total_n += qn[name]
-        if use_series or use_stamps:
-            # per-query stamp when the side has one; else isolated rows
-            # ran post-sweep -> END probe, sweep rows use the series
-            # reading nearest their sweep position
-            if both_iso:
-                po = iso_stamp_old.get(name) or old["calibration_end_sec"]
-                pn = iso_stamp_new.get(name) or new["calibration_end_sec"]
-            else:
-                po = stamp_old.get(name) or (
-                    pa_old(name) if series_old else p_old
-                )
-                pn = stamp_new.get(name) or (
-                    pa_new(name) if series_new else p_new
-                )
-        else:
-            po, pn = p_old, p_new
-        norm = (t_n / pn) / max(t_o / po, 1e-9)
-        if norm > flag or norm < 1 / flag:
-            # Sub-second SWEEP rows are advisory, not gated (round 9,
-            # VERDICT r8 task 8): a fixed-overhead query at 0.3-0.5 s
-            # swings >1.3x on scheduler jitter alone — window_analytics
-            # "moved" three consecutive rounds on an unchanged,
-            # plan-audit-clean plan. Regression CALLS for <1 s queries
-            # come only from the isolated series; sweep-series
-            # sub-second movers stay listed but don't count toward
-            # n_movers.
-            sub_second = (not both_iso) and t_o < 1.0 and t_n < 1.0
-            movers.append(
-                {
-                    "query": name,
-                    "old_sec": t_o,
-                    "new_sec": t_n,
-                    "normalized_ratio": round(norm, 2),
-                    "series": "isolated" if both_iso else "sweep",
-                    **({"sub_second_sweep": True} if sub_second else {}),
-                }
-            )
-    movers.sort(key=lambda m: -m["normalized_ratio"])
-    n_sub_second = sum(1 for m in movers if m.get("sub_second_sweep"))
-    summary = {
-        "common_queries": len(common),
-        "calibrated": calibrated,
-        "probe_old": round(p_old, 3) if calibrated else None,
-        "probe_new": round(p_new, 3) if calibrated else None,
-        "probe_ratio_new_over_old": round(p_new / max(p_old, 1e-9), 3)
-        if calibrated
-        else None,
-        "sweep_total_old": round(total_o, 1),
-        "sweep_total_new": round(total_n, 1),
-        "sweep_total_ratio_raw": round(total_n / max(total_o, 1e-9), 3),
-        "sweep_total_ratio_calibrated": round(
-            (total_n / p_new) / max(total_o / p_old, 1e-9), 3
-        ),
-        "normalization": "probe_stamps" if use_stamps else (
-            "probe_series" if use_series else (
-                "probe_pair" if calibrated else "raw"
-            )
-        ),
-        "flag": flag,
-        # gated count: movers needing attribution (sub-second sweep
-        # rows are advisory — see the loop comment)
-        "n_movers": len(movers) - n_sub_second,
-        "n_movers_sub_second_sweep": n_sub_second,
-    }
-    print(json.dumps({"summary": summary, "movers": movers}, indent=1))
+    print(json.dumps(compare(old, new, flag), indent=1))
 
 
 if __name__ == "__main__":

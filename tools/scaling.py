@@ -32,12 +32,13 @@ SUPRALINEAR_RATIO = 12.0  # 10× data; leave headroom for noise
 
 
 def main() -> None:
-    from bench import HEADLINE
+    from bench import select
 
     from big_data_imdb_classifier_spark import plans
     from big_data_imdb_classifier_spark.session import get_spark
 
     plans.load_all()
+    names = select([])
     spark = get_spark(app_name="scaling-study")
 
     def run(name: str, sf_dir: str) -> float:
@@ -48,7 +49,6 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    names = [n for n in HEADLINE if n in plans.QUERIES]
     # Warm-up (JIT/codegen/Arrow) so sf0.001 timings aren't startup noise.
     for n in names:
         try:

@@ -17,20 +17,9 @@ Regression ledger: pass ``--baseline PATH`` (a previous run's --out
 JSON) and every case also reports ``delta_pct`` — the rows/s change vs
 that baseline — so state-store/watermark regressions get caught
 round-over-round exactly like batch plan regressions in bench.py.
-Like bench.py, each case is drained ``$SPARK_GRAFT_BENCH_REPS`` times
-(default 3) and the median wall time is reported, and the emitted JSON
-carries the 1-minute load averages so contaminated recordings are
-self-identifying.
-
-ISOLATED series (round 9, VERDICT r8 task 1 — the STREAMSPREAD twin of
-bench.py's isolated slow tail): after the sweep, every case is
-re-drained isolated — JVM GC, one un-timed warm drain, then
-median-of-3 timed drains, with a 1-rep calibration probe recorded
-per case — and emitted as ``isolated`` rows carrying
-``isolated_rows_per_sec`` + ``probe_sec``. Streaming throughput bars
-are adjudicated from THIS series, not from sweep rows or prose: the
-sweep numbers keep sweep-position state (checkpoint dirs, JVM heap,
-page cache) exactly like batch in-sweep numbers do.
+Like bench.py, each case is drained ``REPS`` times and the median wall
+time is reported, together with each rep's state-store shape (micro
+batches, state rows and memory), which does not move with host load.
 
 Usage: python tools/stream_bench.py [--out PATH] [--baseline PATH]
                                     [--only case1,case2]
@@ -46,6 +35,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+REPS = 3
 
 
 def main() -> None:
@@ -75,9 +65,10 @@ def main() -> None:
     }
 
     if "--only" in sys.argv:
-        # Isolated re-measurement of named cases (same semantics as
-        # bench.py's spread probe): comma-separated case names.
+        # Comma-separated case names.
         i = sys.argv.index("--only") + 1
+        if i >= len(sys.argv):
+            raise SystemExit("--only requires a value")
         keep = set(sys.argv[i].split(","))
         unknown = keep - set(cases)
         if unknown:
@@ -91,37 +82,6 @@ def main() -> None:
             raise SystemExit("--baseline requires a value")
         with open(sys.argv[i]) as fh:
             baseline_cases = json.load(fh).get("cases", {})
-
-    def _load_1m() -> float:
-        try:
-            return round(os.getloadavg()[0], 2)
-        except OSError:
-            return -1.0
-
-    def _calibrate(reps_c: int = 3) -> float:
-        """Same fixed-work probe as bench.py: constant CPU-bound JVM
-        job whose wall time depends only on host conditions — recorded
-        at sweep start AND end so a degraded host (the r8 finding: the
-        probe read 2.3x its clean anchor with the VM's own CPUs idle)
-        self-identifies instead of reading as a streaming regression."""
-        from pyspark.sql import functions as F
-
-        samples = []
-        for _ in range(reps_c):
-            t0 = time.perf_counter()
-            (
-                spark.range(0, 64_000_000, 1, 32)
-                .select(F.xxhash64("id").alias("h"))
-                .agg(F.sum("h"))
-                .collect()
-            )
-            samples.append(time.perf_counter() - t0)
-        return round(sorted(samples)[len(samples) // 2], 3)
-
-    reps = max(int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")), 1)
-    load_start = _load_1m()
-    _calibrate(1)  # warm (JIT) before the recorded probe
-    calibration_start = _calibrate()
 
     def _state_summary(progress: list) -> dict:
         """Collapse per-micro-batch progress into the numbers that
@@ -145,7 +105,7 @@ def main() -> None:
     for name, build in cases.items():
         walls, out_rows, state_reps = [], 0, []
         try:
-            for rep in range(reps):
+            for rep in range(REPS):
                 ev = S.load_events_stream(spark, SF_DIR)
                 df, mode = build(ev)
                 t0 = time.perf_counter()
@@ -202,63 +162,13 @@ def main() -> None:
             + f"{out_rows:>8} out  {name}"
         )
 
-    def _jvm_gc() -> None:
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
-    # ISOLATED re-drain series (VERDICT r8 task 1): GC + warm +
-    # median-of-3 per case, each stamped with its own 1-rep probe so a
-    # degraded-host reading self-identifies per ROW, not per sweep.
-    # This is the canonical series for throughput bars.
-    isolated: dict[str, dict] = {}
-    for name, build in cases.items():
-        try:
-            _jvm_gc()
-            probe_sec = _calibrate(1)
-            walls = []
-            for rep in range(reps + 1):  # rep 0 = un-timed warm drain
-                ev = S.load_events_stream(spark, SF_DIR)
-                df, mode = build(ev)
-                t0 = time.perf_counter()
-                out, _prog = S.run_to_memory(
-                    spark, df, f"sbi_{name}_{rep}",
-                    output_mode=mode, timeout_sec=600,
-                    with_progress=True,
-                )
-                out.count()
-                if rep:
-                    walls.append(time.perf_counter() - t0)
-        except Exception as ex:  # noqa: BLE001
-            print(f"stream_bench: isolated {name} failed: {ex}",
-                  file=sys.stderr)
-            continue
-        wall = sorted(walls)[len(walls) // 2]
-        isolated[name] = {
-            "isolated_sec": round(wall, 3),
-            "isolated_rows_per_sec": round(n_rows / wall),
-            "probe_sec": probe_sec,
-            "walls": [round(w, 3) for w in walls],
-        }
-        print(
-            f"isolated {isolated[name]['isolated_sec']:7.2f}s  "
-            f"{isolated[name]['isolated_rows_per_sec']:>9,} rows/s  "
-            f"(probe {probe_sec}s)  {name}"
-        )
-
     summary = {
         "metric": "stream_drain",
         "input_rows": n_rows,
         "sf_dir": SF_DIR,
-        "reps": reps,
+        "reps": REPS,
         "stat": "median",
-        "load_1m_start": load_start,
-        "load_1m_end": _load_1m(),
-        "calibration_start_sec": calibration_start,
-        "calibration_end_sec": _calibrate(),
         "cases": results,
-        "isolated": isolated,
     }
     if "--out" in sys.argv:
         i = sys.argv.index("--out") + 1
